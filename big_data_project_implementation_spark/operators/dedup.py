@@ -1190,8 +1190,10 @@ def connected_components(
     # itself — dominated dedup_clusters. Batching halves it. The
     # fixpoint is unchanged: a star round is idempotent at convergence,
     # so the extra composed round past the fixpoint is a no-op and the
-    # signature-equality test fires exactly as before.
-    for _batch in range(max(1, (max_iterations + 1) // 2)):
+    # signature-equality test fires exactly as before. An odd budget
+    # ends on a one-round batch: max_iterations caps the rounds run.
+    rounds = max(1, max_iterations)
+    for _batch in range((rounds + 1) // 2):
         # size this batch's OUTPUT from the previous batch's measured
         # count: edge sets shrink geometrically, so the new edge set is
         # at most the same scale as the last one. Narrow-coalescing the
@@ -1204,9 +1206,11 @@ def connected_components(
         out_target = max(
             1, min(edges.rdd.getNumPartitions(), prev_sig[0] // 500_000 + 1)
         )
+        plan = _star_round(edges)
+        if rounds - 2 * _batch > 1:
+            plan = _star_round(plan)
         new_edges = (
-            _star_round(_star_round(edges))
-            .coalesce(out_target)
+            plan.coalesce(out_target)
             .localCheckpoint(eager=True)
         )
         sig = _edge_signature(new_edges)
@@ -1217,7 +1221,7 @@ def connected_components(
         logging.getLogger(__name__).info(
             "connected_components rounds %d-%d: %d edges",
             2 * _batch + 1,
-            2 * _batch + 2,
+            min(2 * _batch + 2, rounds),
             sig[0],
         )
         if sig == prev_sig:

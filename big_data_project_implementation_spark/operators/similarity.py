@@ -44,7 +44,8 @@ def norm(a: Column | str) -> Column:
 def cosine(a: Column | str, b: Column | str) -> Column:
     a_col = F.col(a) if isinstance(a, str) else a
     b_col = F.col(b) if isinstance(b, str) else b
-    return dot(a_col, b_col) / (norm(a_col) * norm(b_col))
+    # NULL, not an ANSI DIVIDE_BY_ZERO, when either vector has zero norm
+    return F.try_divide(dot(a_col, b_col), norm(a_col) * norm(b_col))
 
 
 def brute_force_topk(
@@ -383,8 +384,8 @@ def cosine_q(vec: Column | str, centq: Column | str) -> Column:
     d = F.aggregate(F.zip_with(v, c, lambda x, y: x * y), zero, lambda a, t: a + t)
     nv = F.aggregate(F.transform(v, lambda x: x * x), zero, lambda a, t: a + t)
     nc = F.aggregate(F.transform(c, lambda x: x * x), zero, lambda a, t: a + t)
-    return d.cast("double") / (
-        F.sqrt(nv.cast("double")) * F.sqrt(nc.cast("double"))
+    return F.try_divide(
+        d.cast("double"), F.sqrt(nv.cast("double")) * F.sqrt(nc.cast("double"))
     )
 
 
@@ -440,16 +441,19 @@ def _route_nearest_cell(df: DataFrame, cents: DataFrame, vec_col: str) -> DataFr
         F.col("_cells"),
         lambda c: F.struct(
             c["cell"].alias("cell"),
-            (
+            F.try_divide(
                 F.aggregate(
                     F.zip_with(F.col("_vq"), c["centroid"], lambda x, y: x * y),
                     zero,
                     lambda a, t: a + t,
-                ).cast("double")
-                / (F.col("_nvs") * F.sqrt(c["nc"].cast("double")))
+                ).cast("double"),
+                F.col("_nvs") * F.sqrt(c["nc"].cast("double")),
             ).alias("cos"),
         ),
     )
+    # a zero-norm vector or centroid scores NULL, which ranks lowest
+    # (the probe window's desc NULLS LAST): an all-NULL row keeps the
+    # lowest cell
     best = F.aggregate(
         scored,
         F.struct(
@@ -457,7 +461,10 @@ def _route_nearest_cell(df: DataFrame, cents: DataFrame, vec_col: str) -> DataFr
             F.lit(None).cast("double").alias("cos"),
         ),
         lambda acc, s: F.when(
-            acc["cell"].isNull() | (s["cos"] > acc["cos"]), s
+            acc["cell"].isNull()
+            | (acc["cos"].isNull() & s["cos"].isNotNull())
+            | (s["cos"] > acc["cos"]),
+            s,
         ).otherwise(acc),
         lambda acc: acc["cell"],
     )
@@ -1334,11 +1341,6 @@ def embedding_covariance(
     )
 
 
-#: serve-time memo for indexes that predate the _ANN_MANIFEST — one
-#: adaptive_refine measurement per (index path, k) per process
-_INLINE_REFINE_CACHE: dict = {}
-
-
 def refine_for_k(shortlist_floor: float, k: int, lo: int = 4, hi: int = 64) -> int:
     """The shortlist multiplier that covers a measured candidate floor
     at serving depth ``k`` — clamped so one noisy estimate can neither
@@ -1513,46 +1515,20 @@ def ivfpq_topk(
     corpus's actual neighbor density (VERDICT r12 what's-wrong #1).
     Pass an int to pin it (the certified registry rows do — their
     unrolled oracles replay a fixed shortlist)."""
-    # the trained model tables are tiny (n_cells rows / m*n_codes rows)
-    # but their PLANS inline every Lloyd iteration — and this function
-    # consumes each model table from several branches, so without a
-    # checkpoint the whole training recursion is re-planned (and at
-    # runtime re-executed per non-reused stage) once per consumer.
-    # localCheckpoint materializes the model once; at 100 TB the
-    # codebooks would be trained on a sample and PERSISTED anyway.
-    cents = ivf_centroids(
-        corpus, n_cells=n_cells, id_col=id_col, vec_col=vec_col
-    ).localCheckpoint(eager=True)
-    books = pq_codebooks(
-        corpus, m=m, k=n_codes, id_col=id_col, vec_col=vec_col
-    ).localCheckpoint(eager=True)
+    cents, books = _train_ivfpq(corpus, n_cells, m, n_codes, id_col, vec_col)
     if refine is None:
         refine = adaptive_refine(
             corpus, books, k=k, id_col=id_col, vec_col=vec_col
         )["refine"]
-    codes = pq_encode(corpus, books, m=m, id_col=id_col, vec_col=vec_col).select(
-        F.col(id_col).alias("neighbor_id"), "codes"
-    )
-    # round 14: corpus routing is a pure projection against the
-    # broadcast centroid array — no exchange/sort/aggregate on the
-    # corpus stream (guide §2.4; see _route_nearest_cell)
-    c_assigned = (
-        _route_nearest_cell(
-            corpus.select(
-                F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
-            ),
-            cents,
-            "c_vec",
-        )
-        .select("cell", "neighbor_id")
-        .join(codes, "neighbor_id")
+    assigned = ivfpq_encode_with_model(
+        corpus, cents, books, m=m, id_col=id_col, vec_col=vec_col
     )
     return _ivfpq_serve(
         queries,
         corpus,
         cents,
         books,
-        c_assigned,
+        assigned,
         k=k,
         nprobe=nprobe,
         refine=refine,
@@ -1560,6 +1536,28 @@ def ivfpq_topk(
         id_col=id_col,
         vec_col=vec_col,
     )
+
+
+def _train_ivfpq(
+    corpus: DataFrame,
+    n_cells: int,
+    m: int,
+    n_codes: int,
+    id_col: str,
+    vec_col: str,
+) -> tuple[DataFrame, DataFrame]:
+    """(centroids, codebooks) for :func:`ivfpq_topk` and
+    :func:`build_ann_index`. The tables are tiny but their plans inline
+    every Lloyd iteration and each is consumed from several branches:
+    localCheckpoint materializes the model once instead of re-planning
+    (and re-running) the training per consumer."""
+    cents = ivf_centroids(
+        corpus, n_cells=n_cells, id_col=id_col, vec_col=vec_col
+    ).localCheckpoint(eager=True)
+    books = pq_codebooks(
+        corpus, m=m, k=n_codes, id_col=id_col, vec_col=vec_col
+    ).localCheckpoint(eager=True)
+    return cents, books
 
 
 def _ivfpq_serve(
@@ -1722,10 +1720,9 @@ def build_ann_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
-    """Train the IVF-PQ model ONCE and persist it as three parquet
-    tables under ``path`` — the deployment shape the inline
-    :func:`ivfpq_topk` docstring promises ("trained on a sample and
-    persisted"), made concrete:
+    """Train the IVF-PQ model ONCE and persist it under ``path`` — the
+    deployment shape the inline :func:`ivfpq_topk` docstring promises
+    ("trained on a sample and persisted"), made concrete:
 
     - ``centroids/``  — the coarse quantizer (n_cells rows);
     - ``codebooks/``  — the PQ sub-centroid table (m * n_codes rows,
@@ -1734,70 +1731,89 @@ def build_ann_index(
       per corpus vector, hive-partitioned BY CELL so a serve-time probe
       of ``nprobe`` cells prunes the scan to nprobe/n_cells of the
       corpus on disk (PartitionFilters), exactly how a billion-vector
-      deployment lays out its lists.
+      deployment lays out its lists;
+    - ``_ANN_MANIFEST`` — JSON, written last: the model shape (``m``,
+      ``n_cells``, ``n_codes``), the table schemas, and the MEASURED
+      re-rank shortlist floor (:func:`adaptive_refine`) from which
+      :func:`ivfpq_topk_from_index` derives its default ``refine``.
 
-    A ``_ANN_MANIFEST`` JSON lands next to the tables (round 13 —
-    VERDICT r12 what's-wrong #1): the MEASURED re-rank shortlist floor
-    from :func:`adaptive_refine` (sampled NN-distance blanket vs PQ
-    distortion), so :func:`ivfpq_topk_from_index` can default its
-    ``refine`` to what this corpus actually needs instead of a fixed
-    constant that silently served 0.22 recall on near-dup corpora.
+    Serving reads the index with :func:`ivfpq_topk_from_index`, index
+    maintenance with :func:`read_ann_model` — no training in the query
+    path. Rebuild on corpus change is the caller's policy (the index
+    is a derived artifact, versioned by path)."""
+    import json
 
-    Serving reads these with :func:`ivfpq_topk_from_index` — no
-    training in the query path. Rebuild on corpus change is the
-    caller's policy (the index is a derived artifact, versioned by
-    path)."""
-    import json as _json
-    import os as _os
+    from big_data_project_implementation_spark.sources import fsio, writers
 
-    from big_data_project_implementation_spark.sources import writers
-
-    cents = ivf_centroids(
-        corpus, n_cells=n_cells, id_col=id_col, vec_col=vec_col
-    ).localCheckpoint(eager=True)
-    books = pq_codebooks(
-        corpus, m=m, k=n_codes, id_col=id_col, vec_col=vec_col
-    ).localCheckpoint(eager=True)
+    cents, books = _train_ivfpq(corpus, n_cells, m, n_codes, id_col, vec_col)
     assigned = ivfpq_encode_with_model(
         corpus, cents, books, m=m, id_col=id_col, vec_col=vec_col
     )
     writers.write(cents, f"{path}/centroids", mode="overwrite")
     writers.write(books, f"{path}/codebooks", mode="overwrite")
     writers.write(assigned, f"{path}/codes", mode="overwrite", partition_by=["cell"])
-    manifest = adaptive_refine(
-        corpus, books, id_col=id_col, vec_col=vec_col
-    )
-    from big_data_project_implementation_spark.sources import fsio
-
+    manifest = adaptive_refine(corpus, books, id_col=id_col, vec_col=vec_col)
+    manifest.update(m=m, n_cells=n_cells, n_codes=n_codes)
+    manifest["schemas"] = {
+        name: json.loads(df.schema.json())
+        for name, df in (("centroids", cents), ("codebooks", books), ("codes", assigned))
+    }
     fsio.write_text(
-        corpus.sparkSession, f"{path}/_ANN_MANIFEST", _json.dumps(manifest)
+        corpus.sparkSession, f"{path}/_ANN_MANIFEST", json.dumps(manifest)
     )
 
 
-def read_ann_manifest(path: str, spark=None) -> dict | None:
-    """The index's measured-parameter manifest, or None for an index
-    built before round 13 (serving then measures inline — see
-    :func:`ivfpq_topk_from_index`). Reads through the engine
-    filesystem (round-13 self-review: the index's other artifacts go
-    through the Hadoop FS, so HDFS/s3a paths must work here too);
-    local paths fall back to plain IO when no session is active."""
-    import json as _json
-    import os as _os
+def read_ann_manifest(path: str, spark=None) -> dict:
+    """The index's ``_ANN_MANIFEST`` (see :func:`build_ann_index`),
+    read through the engine filesystem so HDFS/s3a index paths work
+    like the index's other artifacts. Raises when the manifest is
+    missing or predates the model shape: such an index must be rebuilt
+    with :func:`build_ann_index`."""
+    import json
 
     from pyspark.sql import SparkSession
 
-    spark = spark or SparkSession.getActiveSession()
-    if spark is not None:
-        from big_data_project_implementation_spark.sources import fsio
+    from big_data_project_implementation_spark.sources import fsio
 
-        if not fsio.exists(spark, f"{path}/_ANN_MANIFEST"):
-            return None
-        return _json.loads(fsio.read_text(spark, f"{path}/_ANN_MANIFEST"))
-    p = _os.path.join(path, "_ANN_MANIFEST")
-    if not _os.path.exists(p):
-        return None
-    with open(p) as fh:
-        return _json.loads(fh.read())
+    spark = spark or SparkSession.active()
+    p = f"{path}/_ANN_MANIFEST"
+    if not fsio.exists(spark, p):
+        raise FileNotFoundError(
+            f"{p} not found: {path} is not a complete IVF-PQ index; "
+            "rebuild it with build_ann_index"
+        )
+    manifest = json.loads(fsio.read_text(spark, p))
+    if "schemas" not in manifest:
+        raise ValueError(
+            f"{p} has no model shape (written by older code); rebuild the "
+            "index with build_ann_index"
+        )
+    return manifest
+
+
+def read_ann_model(path: str, spark=None) -> tuple[DataFrame, DataFrame, dict]:
+    """The frozen model of a persisted index: ``(centroids, codebooks,
+    manifest)``, with ``manifest["m"]`` the sub-vector count
+    :func:`ivfpq_encode_with_model` takes. Tables are read with the
+    schemas the manifest records, so building a plan on them runs no
+    Spark job (no schema inference, no metadata aggregate)."""
+    from pyspark.sql import SparkSession
+
+    spark = spark or SparkSession.active()
+    manifest = read_ann_manifest(path, spark)
+    cents = _read_index_table(spark, manifest, "centroids", f"{path}/centroids")
+    books = _read_index_table(spark, manifest, "codebooks", f"{path}/codebooks")
+    return cents, books, manifest
+
+
+def _read_index_table(spark, manifest: dict, name: str, table_path: str) -> DataFrame:
+    """One index table read with the schema its manifest records and
+    projected to it, so the partition column of a delta segment
+    directory (``batch_id=``, ``seg=``) drops out."""
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromJson(manifest["schemas"][name])
+    return spark.read.schema(schema).parquet(table_path).select(schema.fieldNames())
 
 
 def _codes_dir(path: str) -> str:
@@ -1852,10 +1868,6 @@ def ivfpq_compact(spark, path: str, delta_path: str) -> None:
     confirming no compactor is running. Readers never lock — the
     pointer swap keeps them lock-free."""
     import os
-    import shutil
-    import uuid
-
-    from big_data_project_implementation_spark.sources import writers
 
     lock = os.path.join(path, "codes.compact.lock")
     try:
@@ -1928,9 +1940,9 @@ def ivfpq_topk_from_index(
     runs: no Lloyd iterations in the plan, just two tiny model scans
     (broadcast), the cell-pruned code scan, the broadcast ADC LUT, and
     the ``refine * k`` exact re-rank against ``corpus`` (the vector
-    fetch-by-id side). ``m`` is read off the codebook table (model
-    metadata, m*n_codes rows), not re-specified — the index is
-    self-describing.
+    fetch-by-id side). The model shape (``m``) and the table schemas
+    come from the index's ``_ANN_MANIFEST`` (:func:`read_ann_model`),
+    so building the request runs no Spark job.
 
     ``delta_path`` (round 8) unions in incrementally-appended code
     segments (:func:`ivfpq_encode_with_model` output written per
@@ -1941,48 +1953,23 @@ def ivfpq_topk_from_index(
     base (rebuild-on-threshold is the caller's compaction policy).
 
     ``refine=None`` (the default since round 13) resolves to the
-    MEASURED shortlist the index's ``_ANN_MANIFEST`` pins for this
-    corpus's neighbor density, scaled to the serving ``k``
-    (:func:`refine_for_k`); an index built before the manifest existed
-    measures inline (one bounded sampled job) — so a caller who takes
-    the defaults never gets the fixed-constant 0.22-recall regime
-    (VERDICT r12 what's-wrong #1)."""
+    MEASURED shortlist the manifest pins for this corpus's neighbor
+    density, scaled to the serving ``k`` (:func:`refine_for_k`), so a
+    caller who takes the defaults never gets the fixed-constant
+    0.22-recall regime (VERDICT r12 what's-wrong #1)."""
     spark = queries.sparkSession
-    cents = spark.read.parquet(f"{path}/centroids")
-    books = spark.read.parquet(f"{path}/codebooks")
+    cents, books, manifest = read_ann_model(path, spark)
     if refine is None:
-        manifest = read_ann_manifest(path, spark)
-        if manifest is not None:
-            # the floor was measured at the manifest's k: a deeper
-            # serving k has strictly deeper exact-top-k members, so
-            # scale the floor by k/measured_k (uniform-tail-density
-            # extrapolation) before deriving refine (round-13
-            # self-review: an unscaled floor under-covers large k)
-            mk = manifest.get("k") or 5
-            floor = manifest["shortlist_floor"] * max(1.0, k / mk)
-            refine = refine_for_k(floor, k)
-        elif (path, k) in _INLINE_REFINE_CACHE:
-            refine = _INLINE_REFINE_CACHE[(path, k)]
-        else:
-            # pre-manifest index: measure once per (path, k) and memo
-            # it — the estimator is a bounded sampled job, but paying
-            # it on EVERY serve call would put training in the query
-            # path (round-13 self-review)
-            refine = adaptive_refine(
-                corpus, books, k=k, id_col=id_col, vec_col=vec_col
-            )["refine"]
-            _INLINE_REFINE_CACHE[(path, k)] = refine
-    assigned = spark.read.parquet(_codes_dir(path)).select(
-        "cell", "neighbor_id", "codes"
-    )
+        # the floor was measured at the manifest's k; a deeper serving
+        # k buries its exact top-k deeper, so scale by k/measured_k
+        # (uniform tail density) or the shortlist under-covers large k
+        floor = manifest["shortlist_floor"] * max(1.0, k / manifest["k"])
+        refine = refine_for_k(floor, k)
+    assigned = _read_index_table(spark, manifest, "codes", _codes_dir(path))
     if delta_path is not None:
         assigned = assigned.unionByName(
-            spark.read.parquet(delta_path).select(
-                "cell", "neighbor_id", "codes"
-            )
+            _read_index_table(spark, manifest, "codes", delta_path)
         )
-    # model metadata from the model table itself (m*n_codes rows)
-    m = books.agg(F.max("sub")).first()[0] + 1
     return _ivfpq_serve(
         queries,
         corpus,
@@ -1992,7 +1979,7 @@ def ivfpq_topk_from_index(
         k=k,
         nprobe=nprobe,
         refine=refine,
-        m=m,
+        m=manifest["m"],
         id_col=id_col,
         vec_col=vec_col,
     )

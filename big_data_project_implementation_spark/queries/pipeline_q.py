@@ -4622,8 +4622,9 @@ def _ann_index_cached(emb, sf_dir: str, variant: str = "") -> str:
     on first use (shared by the batch serve query and the round-8
     streaming serve query — same hyper-parameters, same oracle).
 
-    v2: integer micro-unit centroids (round-6 cosine_q conversion) —
-    the version segment invalidates indexes built by older code.
+    v3: the _ANN_MANIFEST records the model shape and table schemas
+    (v2: integer micro-unit centroids) — the version segment makes
+    indexes built by older code rebuild instead of failing to serve.
     Cache safety (round 7 + ADVICE r7 TOCTOU re-check): the build
     lands in a unique staging dir and publication is a single atomic
     rename; a COMPLETE concurrent index (codes/_SUCCESS present at
@@ -4640,7 +4641,7 @@ def _ann_index_cached(emb, sf_dir: str, variant: str = "") -> str:
 
     path = _os.path.join(
         _tempfile.gettempdir(),
-        "spark_graft_ann_index_v2_" + _getpass.getuser(),
+        "spark_graft_ann_index_v3_" + _getpass.getuser(),
         sf_dir.strip("/").replace("/", "_") + variant,
     )
     if not _os.path.exists(_os.path.join(path, "codes", "_SUCCESS")):

@@ -1293,12 +1293,9 @@ def stream_ann_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = tempfile.mkdtemp(prefix="ann_delta_ckpt_")
 
     def append_segment(batch: DataFrame, batch_id: int) -> None:
-        ss = batch.sparkSession
-        cents = ss.read.parquet(f"{path}/centroids")
-        books = ss.read.parquet(f"{path}/codebooks")
-        m = books.agg(F.max("sub")).first()[0] + 1
+        cents, books, manifest = sim.read_ann_model(path, batch.sparkSession)
         (
-            sim.ivfpq_encode_with_model(batch, cents, books, m=m)
+            sim.ivfpq_encode_with_model(batch, cents, books, m=manifest["m"])
             .write.mode("overwrite")
             .parquet(f"{delta}/batch_id={batch_id}")
         )

@@ -460,6 +460,22 @@ def test_connected_components_empty_and_self_loops(spark):
     assert dedup.connected_components(pairs).count() == 0
 
 
+def test_connected_components_round_cap_is_exact(spark):
+    """max_iterations caps the star ROUNDS, odd counts included: on the
+    path 1-2-3-4-5 one large-star + small-star round leaves the edges
+    (2,1) (3,1) (4,2) (5,3), not the converged star a second round
+    would reach."""
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (4, 5)], "id_a long, id_b long"
+    )
+    got = {
+        (r["id"], r["component"])
+        for r in dedup.connected_components(pairs, max_iterations=1).collect()
+    }
+    one_round = {(2, 1), (3, 1), (4, 2), (5, 3)}
+    assert got == one_round | {(small, small) for _, small in one_round}
+
+
 def test_assign_dedup_clusters_labels_every_row(spark):
     df = spark.createDataFrame(
         [(i, f"doc {i}") for i in range(6)], "doc_id long, text string"

@@ -488,11 +488,11 @@ def test_adaptive_refine_measured_defaults(spark):
         assert auto.groupBy("query_id").count().agg(
             F.max("count")
         ).first()[0] <= 5
-        # an index with no manifest (pre-round-13) still gets a measured
-        # default — the estimator runs inline at serve time
+        # an index with no manifest is not an index: serving refuses it
+        # and names the path to rebuild
         os.remove(os.path.join(root, "_ANN_MANIFEST"))
-        legacy = sim.ivfpq_topk_from_index(qs, emb, root, k=5, nprobe=4)
-        assert legacy.count() > 0
+        with pytest.raises(FileNotFoundError, match="build_ann_index"):
+            sim.ivfpq_topk_from_index(qs, emb, root, k=5, nprobe=4)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 

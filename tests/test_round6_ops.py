@@ -63,14 +63,63 @@ def test_ann_index_layout_is_cell_partitioned(spark, tmp_path):
     sim.build_ann_index(emb, idx, n_cells=8, m=4, n_codes=16)
     cells = [d for d in os.listdir(os.path.join(idx, "codes")) if d.startswith("cell=")]
     assert 1 <= len(cells) <= 8  # hive layout, one dir per populated cell
-    books = spark.read.parquet(os.path.join(idx, "codebooks"))
+    cents, books, manifest = sim.read_ann_model(idx, spark)
     assert books.count() <= 4 * 16
-    # m is self-describing metadata
+    # the model shape is self-describing metadata in the manifest
+    assert (manifest["m"], manifest["n_cells"], manifest["n_codes"]) == (4, 8, 16)
     assert books.agg(F.max("sub")).first()[0] + 1 == 4
+    assert cents.count() <= 8
     # every corpus vector has exactly one code row
     codes = spark.read.parquet(os.path.join(idx, "codes"))
     assert codes.count() == emb.count()
     assert codes.select("neighbor_id").distinct().count() == emb.count()
+
+
+def test_serve_request_build_runs_no_jobs(spark):
+    """Building an ivfpq_topk_from_index request is plan construction
+    only: the model shape and the table schemas come from the index's
+    _ANN_MANIFEST, so no Spark job runs before the caller's action."""
+    from big_data_project_implementation_spark.queries.pipeline_q import (
+        _ann_index_cached,
+    )
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    path = _ann_index_cached(emb, SF_DIR)
+    qs = emb.filter(F.col("vec_id") < 5)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    sim.ivfpq_topk_from_index(qs, emb, path, k=5, nprobe=4)
+    assert set(tracker.getJobIdsForGroup()) == before
+
+
+def test_zero_norm_vectors_score_null_and_route_lowest(spark):
+    """With ANSI on (the session default) a zero-norm vector or centroid
+    scores NULL instead of failing the job with DIVIDE_BY_ZERO. NULL
+    ranks lowest in routing: a nonzero vector never routes to a zero
+    centroid, and a zero vector routes to the lowest cell."""
+    cents = spark.createDataFrame(
+        [(0, [0, 0, 0, 0]), (1, [1_000_000, 0, 0, 0])],
+        "cell int, centroid array<bigint>",
+    )
+    vecs = spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.0, 0.0]), (2, [0.0, 0.0, 0.0, 0.0])],
+        "vec_id long, embedding array<float>",
+    )
+    routed = sim._route_nearest_cell(vecs, cents, "embedding").collect()
+    assert {r.vec_id: r.cell for r in routed} == {1: 1, 2: 0}
+    scores = vecs.crossJoin(cents).select(
+        "vec_id",
+        "cell",
+        sim.cosine_q("embedding", "centroid").alias("q"),
+        sim.cosine("embedding", "embedding").alias("f"),
+    )
+    got = {(r.vec_id, r.cell): (r.q, r.f) for r in scores.collect()}
+    assert got == {
+        (1, 0): (None, 1.0),
+        (1, 1): (1.0, 1.0),
+        (2, 0): (None, None),
+        (2, 1): (None, None),
+    }
 
 
 def test_curate_identity_stages_share_tokenizer(spark):

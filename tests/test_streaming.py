@@ -760,12 +760,9 @@ def test_ann_index_update_segments_exactly_once(spark):
     ckpt = tempfile.mkdtemp(prefix="ann_delta_test_ckpt_")
 
     def append_segment(batch, batch_id):
-        ss = batch.sparkSession
-        cents = ss.read.parquet(f"{path}/centroids")
-        books = ss.read.parquet(f"{path}/codebooks")
-        m = books.agg(F.max("sub")).first()[0] + 1
+        cents, books, manifest = sim.read_ann_model(path, batch.sparkSession)
         (
-            sim.ivfpq_encode_with_model(batch, cents, books, m=m)
+            sim.ivfpq_encode_with_model(batch, cents, books, m=manifest["m"])
             .write.mode("overwrite")
             .parquet(f"{delta}/batch_id={batch_id}")
         )
@@ -794,13 +791,14 @@ def test_ann_index_update_segments_exactly_once(spark):
         assert seg.count() == len(rows), "duplicate neighbor_id in segments"
         assert set(rows) == arriving, "segments must cover every arrival"
         # frozen-model parity: the stream's encode IS the batch encode
-        cents = spark.read.parquet(f"{path}/centroids")
-        books = spark.read.parquet(f"{path}/codebooks")
-        m = books.agg(F.max("sub")).first()[0] + 1
+        cents, books, manifest = sim.read_ann_model(path, spark)
         batch_enc = {
             r.neighbor_id: (r.cell, tuple(r.codes))
             for r in sim.ivfpq_encode_with_model(
-                emb.filter(F.col("vec_id") % 4 == 3), cents, books, m=m
+                emb.filter(F.col("vec_id") % 4 == 3),
+                cents,
+                books,
+                m=manifest["m"],
             ).collect()
         }
         assert rows == batch_enc
